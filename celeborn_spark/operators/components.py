@@ -143,6 +143,7 @@ def connected_components(
         # read twice: the convergence action below + the continuing chain
         labels = labels.localCheckpoint(eager=False)
         if numeric_labels:
+            # 1-row scalar aggregate: the label sum, compared across rounds
             s = labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
             ).collect()[0][0]

@@ -12,6 +12,9 @@ configuration, not onto code we write:
                                       -> spark.io.compression.codec=zstd
 - tiered memory->disk spill (worker/storage/TierWriter.scala)
                                       -> unified memory manager (built-in)
+- metadata resolved once, then cached (GetReducerFileGroup)
+                                      -> codegen cache sized to the working
+                                         set (spark.sql.codegen.cache.maxEntries)
 
 On a real cluster the same session factory is used; only master/memory
 change. Shuffle partitions default to the core count locally — on a
@@ -70,6 +73,11 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Compiled classes, not data. The default 100 entries is below the
+        # ~135 classes the analyst queries generate, so each class was
+        # evicted before reuse and every pass recompiled ~114 of them
+        # (~1 s of Janino). A static conf: settable only at creation.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -181,11 +181,15 @@ def test_stateful_totals_batching_invariant(spark, sf_dir, tmp_path):
 
 
 def _write_click_purchase_slices(dirpath, n_slices, per_slice):
-    """One parquet file per hour-slice (written in order, so the file
-    source replays them oldest-first): per user a click and a purchase
-    30 min later. Event time advances 1h per slice, driving the
-    watermark forward every micro-batch."""
+    """One parquet file per hour-slice, replayed oldest-first: per user
+    a click and a purchase 30 min later. Event time advances 1h per
+    slice, driving the watermark forward every micro-batch. The file
+    source orders files by modification time in milliseconds, and files
+    written in a tight loop share one; a tie replayed out of order puts
+    a whole slice behind the watermark. So each file gets its own mtime,
+    one second apart, in slice order."""
     import os
+    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -213,6 +217,10 @@ def _write_click_purchase_slices(dirpath, n_slices, per_slice):
             ),
             f"{dirpath}/slice_{i:03d}.parquet",
         )
+    now = int(time.time())
+    for i in range(n_slices):
+        mtime = now - n_slices + i
+        os.utime(f"{dirpath}/slice_{i:03d}.parquet", (mtime, mtime))
 
 
 def _run_join_replay(spark, dirpath, name):
