@@ -17,7 +17,8 @@ import stat
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -59,7 +60,7 @@ _VIEWS_REGISTERED: dict[str, str] = {}
 # the memoized schema runs none (20-45 ms).
 # (app_id, table path) -> (file stamp, inferred schema); one entry per
 # path, replaced when the stamp changes.
-_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
 
 
 def _pin_session_confs(spark: SparkSession) -> None:
@@ -116,30 +117,30 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """events with ``ts`` as a session-TZ timestamp, whatever physical
+    flavor the parquet holds. Real parquet timestamps come in several
+    flavors; dispatch on the type the scan (batch or stream) produced:
+      TIMESTAMP(NANOS) + nanosAsLong -> LongType: truncate to micros
+        (the same truncation DuckDB applies);
+      TIMESTAMP(MICROS, isAdjustedToUTC=false) -> TIMESTAMP_NTZ: cast
+        to session-TZ timestamp (identity under pinned UTC);
+      TIMESTAMP(MICROS, UTC) and legacy INT96 -> TimestampType: pass
+        through."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _pin_session_confs(spark)
-    if name == "events":
-        # A real user's parquet timestamps come in several physical
-        # flavors; dispatch on what the scan actually produced so the
-        # engine reads any of them:
-        #   TIMESTAMP(NANOS) + nanosAsLong -> LongType: truncate to
-        #     micros (the same truncation DuckDB applies);
-        #   TIMESTAMP(MICROS, isAdjustedToUTC=false) -> TIMESTAMP_NTZ:
-        #     cast to session-TZ timestamp (identity under pinned UTC);
-        #   TIMESTAMP(MICROS, UTC) -> TimestampType: pass through.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        df = _read_parquet(spark, table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        return df
-    return _read_parquet(spark, table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -44,3 +44,20 @@ def values_table(spark, rows, schema: str):
     )
     vals = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
     return spark.sql(f"SELECT {casts} FROM VALUES {vals} AS t({names})")
+
+
+def _spread(df, key: str):
+    """Hash-exchange a NARROW input across all cores before a CPU-heavy
+    map stage (text kernels, Arrow mapInPandas, higher-order-function
+    cosines at ~20 µs per 64-dim pair). Small parquet arrives as one
+    split and would serialize the whole stage onto one core — measured
+    r13: the near-dup recall guard spent 2.8 s on one task. At 100 TB
+    inputs are already wide and the repartition is SKIPPED outright
+    (r13 — the old unconditional form paid a full shuffle of the text
+    mass at scale for nothing, and the skip keeps the zero-shuffle
+    map-only plans the signature operators advertise). The
+    partition-count probe is a plan-only driver check, no job."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par, key)

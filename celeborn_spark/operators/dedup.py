@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import _spread
 from celeborn_spark.operators.textops import tokens
 
 
@@ -116,21 +117,6 @@ def edit_distance_pairs(
         .filter(F.col("dist") >= 0)  # threshold form returns -1 past max_dist
         .select("id_a", "id_b", "dist")
     )
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-exchange a NARROW input across all cores before a
-    CPU-heavy map stage. Small files arrive as one split and would
-    serialize the whole stage onto one core; at 100 TB inputs are
-    already wide and the repartition is SKIPPED outright (r13 — the
-    old unconditional form paid a full shuffle of the text mass at
-    scale for nothing; the partition-count probe is a plan-only
-    driver check, no job)."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, key)
 
 
 def shingles_from_tokens(toks: Column, n: int) -> Column:
@@ -781,8 +767,6 @@ def set_similarity_join(
     exactness guarantee instead of a probabilistic one."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from celeborn_spark.operators.textops import tokens
-
     toks = (
         _spread(df, id_col)
         .select(F.col(id_col).alias("_id"), F.explode(F.array_distinct(tokens(text_col))).alias("tok"))

@@ -490,6 +490,27 @@ def pr_curve_oracle_sql(
 # --------------------------------------------------------------------------
 
 
+def _score_bins(
+    df: DataFrame, score_col: str, label_col: str, denom_cents: int, n_bins: int
+) -> DataFrame:
+    """Rows as (bin, s, label) over ``n_bins`` fixed-width
+    pseudo-probability bins: s = floor(score*100) cents as BIGINT,
+    prob = s/denom_cents, bin = least(n_bins, floor(n_bins*s/D) + 1),
+    label as BIGINT. The one binning of the score-bin family
+    (calibration_bins, brier_decomposition, threshold_sweep,
+    hosmer_lemeshow); integer-exact, so every per-bin aggregate over it
+    is too."""
+    s = F.floor(F.col(score_col) * 100).cast("long")
+    return df.select(
+        F.least(
+            F.lit(n_bins),
+            (F.floor(F.lit(n_bins) * s / F.lit(denom_cents)) + 1).cast("long"),
+        ).alias("bin"),
+        s.alias("s"),
+        F.col(label_col).cast("long").alias("label"),
+    )
+
+
 def calibration_bins(
     df: DataFrame,
     score_col: str,
@@ -512,16 +533,8 @@ def calibration_bins(
 
     Output: one row per non-empty bin (bin, n, n_pos, acc, conf, ece —
     ece repeated on every row by construction)."""
-    s = F.floor(F.col(score_col) * 100).cast("long")
     d = F.lit(denom_cents)
-    binned = df.select(
-        F.least(
-            F.lit(n_bins),
-            (F.floor(F.lit(n_bins) * s / d) + 1).cast("long"),
-        ).alias("bin"),
-        s.alias("s"),
-        F.col(label_col).cast("long").alias("label"),
-    )
+    binned = _score_bins(df, score_col, label_col, denom_cents, n_bins)
     # per_bin is referenced twice (ECE totals + output rows);
     # checkpoint the <= n_bins relation so row mass scans ONCE
     per_bin = (
@@ -1224,16 +1237,7 @@ def brier_decomposition(
 
     Scale shape: one map-combined bin aggregate; everything after is
     an <= n_bins-row relation with 1-row broadcast totals."""
-    s = F.floor(F.col(score_col) * 100).cast("long")
-    d = F.lit(denom_cents)
-    binned = df.select(
-        F.least(
-            F.lit(n_bins),
-            (F.floor(F.lit(n_bins) * s / d) + 1).cast("long"),
-        ).alias("bin"),
-        s.alias("s"),
-        F.col(label_col).cast("long").alias("label"),
-    )
+    binned = _score_bins(df, score_col, label_col, denom_cents, n_bins)
     per_bin = (
         binned.groupBy("bin")
         .agg(
@@ -1372,15 +1376,7 @@ def threshold_sweep(
 
     Scale shape: one map-combined bin aggregate, then <= n_bins rows
     with prefix windows and 1-row broadcast totals."""
-    s = F.floor(F.col(score_col) * 100).cast("long")
-    d = F.lit(denom_cents)
-    binned = df.select(
-        F.least(
-            F.lit(n_bins),
-            (F.floor(F.lit(n_bins) * s / d) + 1).cast("long"),
-        ).alias("bin"),
-        F.col(label_col).cast("long").alias("label"),
-    )
+    binned = _score_bins(df, score_col, label_col, denom_cents, n_bins)
     per_bin = binned.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_b"),
         F.sum("label").cast("long").alias("pos"),
@@ -2018,16 +2014,7 @@ def hosmer_lemeshow(
 
     Output: one row per non-empty bin
     (bin, n, obs_pos, exp_cents, hl_term, hl_chi2, dof)."""
-    s = F.floor(F.col(score_col) * 100).cast("long")
-    d = F.lit(denom_cents)
-    binned = df.select(
-        F.least(
-            F.lit(n_bins),
-            (F.floor(F.lit(n_bins) * s / d) + 1).cast("long"),
-        ).alias("bin"),
-        s.alias("s"),
-        F.col(label_col).cast("long").alias("label"),
-    )
+    binned = _score_bins(df, score_col, label_col, denom_cents, n_bins)
     per_bin = (
         binned.groupBy("bin")
         .agg(
@@ -2257,6 +2244,55 @@ def isotonic_oracle_sql(
 # --------------------------------------------------------------------------
 
 
+def _two_sample_cdf(
+    df: DataFrame, group_col: str, cents_col: str, group_a, group_b, cols
+) -> DataFrame:
+    """The merged two-sample empirical CDF over the DISTINCT values of
+    ``cents_col`` (groups ``group_a`` / ``group_b`` of ``group_col``),
+    one row per value with the ``cols`` named from: c (both groups'
+    count at the value), cuma / cumb (each group's cumulative count
+    through the value), h (the pooled cumulative count) and the group
+    totals n_a / n_b. All exact BIGINT — the shared input of the
+    EDF-family statistics (kuiper_test, cramer_von_mises,
+    anderson_darling). Each statistic selects only the columns it
+    reads, so its window operator computes only its own window sums.
+
+    Scale shape (100 TB): one conditional histogram aggregate over row
+    mass; the cumulative windows run over DISTINCT values. The group
+    totals fold IN-ROW as full-frame window sums on the same sorted
+    frame (exact BIGINT — order-insensitive): a separate `tot`
+    aggregate re-ran the scan+histogram subtree a second time and
+    re-attached via crossJoin (r14; the r13 reference-count /
+    scalar-fold rule)."""
+    g = F.col(group_col)
+    hist = (
+        df.filter(g.isin([group_a, group_b]))
+        .groupBy(F.col(cents_col).alias("v"))
+        .agg(
+            F.sum(F.when(g == group_a, 1).otherwise(0))
+            .cast("long")
+            .alias("ca"),
+            F.sum(F.when(g == group_b, 1).otherwise(0))
+            .cast("long")
+            .alias("cb"),
+        )
+    )
+    # window input: the DISTINCT-value histogram (value-space bounded)
+    wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    wfull = Window.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    cdf = {
+        "c": F.col("ca") + F.col("cb"),
+        "cuma": F.sum("ca").over(wv),
+        "cumb": F.sum("cb").over(wv),
+        "h": F.sum("ca").over(wv) + F.sum("cb").over(wv),
+        "n_a": F.sum("ca").over(wfull).cast("long"),
+        "n_b": F.sum("cb").over(wfull).cast("long"),
+    }
+    return hist.select(*(cdf[c].alias(c) for c in cols))
+
+
 def kuiper_test(
     df: DataFrame, group_col: str, cents_col: str, group_a, group_b
 ) -> DataFrame:
@@ -2275,36 +2311,9 @@ def kuiper_test(
 
     Scale shape (100 TB): one conditional histogram aggregate over
     row mass; the cumulative window runs over DISTINCT values."""
-    from pyspark.sql import Window as W
-
-    g = F.col(group_col)
-    hist = (
-        df.filter(g.isin([group_a, group_b]))
-        .groupBy(F.col(cents_col).alias("v"))
-        .agg(
-            F.sum(F.when(g == group_a, 1).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(g == group_b, 1).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-    )
-    # window input: the DISTINCT-value histogram (value-space bounded).
-    # Group totals fold IN-ROW as full-frame window sums on the same
-    # sorted frame (exact BIGINT — order-insensitive): the former
-    # separate `tot` aggregate re-ran the scan+histogram subtree a
-    # second time and re-attached via crossJoin (r14; the r13
-    # reference-count / scalar-fold rule).
-    wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
-    wfull = W.orderBy("v").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    cum = hist.select(
-        F.sum("ca").over(wv).alias("cuma"),
-        F.sum("cb").over(wv).alias("cumb"),
-        F.sum("ca").over(wfull).cast("long").alias("n_a"),
-        F.sum("cb").over(wfull).cast("long").alias("n_b"),
+    cum = _two_sample_cdf(
+        df, group_col, cents_col, group_a, group_b,
+        ("cuma", "cumb", "n_a", "n_b"),
     )
     d = (
         cum.select(
@@ -2405,37 +2414,9 @@ def cramer_von_mises(
 
     Scale shape (100 TB): one conditional histogram aggregate; the
     cumulative window runs over DISTINCT values."""
-    from pyspark.sql import Window as W
-
-    g = F.col(group_col)
-    hist = (
-        df.filter(g.isin([group_a, group_b]))
-        .groupBy(F.col(cents_col).alias("v"))
-        .agg(
-            F.sum(F.when(g == group_a, 1).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(g == group_b, 1).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-    )
-    # window input: the DISTINCT-value histogram (value-space bounded).
-    # Group totals fold IN-ROW as full-frame window sums on the same
-    # sorted frame (exact BIGINT — order-insensitive): the former
-    # separate `tot` aggregate re-ran the scan+histogram subtree a
-    # second time and re-attached via crossJoin (r14; the r13
-    # reference-count / scalar-fold rule).
-    wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
-    wfull = W.orderBy("v").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    cum = hist.select(
-        (F.col("ca") + F.col("cb")).alias("c"),
-        F.sum("ca").over(wv).alias("cuma"),
-        F.sum("cb").over(wv).alias("cumb"),
-        F.sum("ca").over(wfull).cast("long").alias("n_a"),
-        F.sum("cb").over(wfull).cast("long").alias("n_b"),
+    cum = _two_sample_cdf(
+        df, group_col, cents_col, group_a, group_b,
+        ("c", "cuma", "cumb", "n_a", "n_b"),
     )
     t9 = F.expr(
         "CAST(floor(c * (CAST(n_b * cuma - n_a * cumb AS DOUBLE)"
@@ -2538,37 +2519,9 @@ def anderson_darling(
 
     Scale shape (100 TB): one conditional histogram aggregate; the
     cumulative window runs over DISTINCT values."""
-    from pyspark.sql import Window as W
-
-    g = F.col(group_col)
-    hist = (
-        df.filter(g.isin([group_a, group_b]))
-        .groupBy(F.col(cents_col).alias("v"))
-        .agg(
-            F.sum(F.when(g == group_a, 1).otherwise(0))
-            .cast("long")
-            .alias("ca"),
-            F.sum(F.when(g == group_b, 1).otherwise(0))
-            .cast("long")
-            .alias("cb"),
-        )
-    )
-    # window input: the DISTINCT-value histogram (value-space bounded).
-    # The group totals fold IN-ROW as full-frame window sums over the
-    # same sorted frame (exact BIGINT sums — order-insensitive): the
-    # former separate `tot` aggregate re-ran the whole scan+histogram
-    # subtree a second time (hist was referenced twice) and re-attached
-    # via a crossJoin (r14; the r13 reference-count / scalar-fold rule).
-    wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
-    wfull = W.orderBy("v").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    cum = hist.select(
-        (F.col("ca") + F.col("cb")).alias("c"),
-        F.sum("ca").over(wv).alias("cuma"),
-        (F.sum("ca").over(wv) + F.sum("cb").over(wv)).alias("h"),
-        F.sum("ca").over(wfull).cast("long").alias("n_a"),
-        F.sum("cb").over(wfull).cast("long").alias("n_b"),
+    cum = _two_sample_cdf(
+        df, group_col, cents_col, group_a, group_b,
+        ("c", "cuma", "h", "n_a", "n_b"),
     )
     t9 = F.expr(
         "CAST(floor(c"

@@ -129,42 +129,6 @@ def incremental_agg_oracle_sql(
     """
 
 
-def quantile_state(
-    df: DataFrame,
-    key: str,
-    value_col: str,
-    lo_cents: int,
-    width_cents: int,
-    n_bins: int,
-) -> DataFrame:
-    """Mergeable per-key quantile state: fixed-grid histogram counts
-    over integer cents. (key, bin, n) with bin = (c - c mod w)/w clamped
-    to [0, n_bins) — the subtract-mod form makes the floor-division an
-    EXACT-multiple IEEE division, identical in every engine (a bare
-    float divide could round across a bin boundary). Counts are
-    integers, so states merge by addition — the quantile analogue of
-    agg_state, and the reason percentile refresh at 100 TB touches only
-    the delta."""
-    cents = F.floor(F.col(value_col) * 100).cast("long")
-    c = F.greatest(cents - F.lit(lo_cents), F.lit(0))
-    bin_ = F.least(
-        ((c - (c % F.lit(width_cents))) / F.lit(width_cents)).cast("long"),
-        F.lit(n_bins - 1),
-    )
-    return df.groupBy(F.col(key), bin_.alias("bin")).agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-def merge_quantile_states(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
-    """Add two histogram states: union + one (key, bin)-keyed sum."""
-    return (
-        a.unionByName(b)
-        .groupBy(key, "bin")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
 def quantile_state_sides(
     df: DataFrame,
     key: str,
@@ -174,11 +138,18 @@ def quantile_state_sides(
     width_cents: int,
     n_bins: int,
 ) -> DataFrame:
-    """Per-(key, side) mergeable quantile states in ONE scan: the same
-    fixed-grid histogram as `quantile_state`, with ``side_col`` (e.g. a
-    base-vs-delta flag) as an extra group key — the stacked form of two
-    separate state builds, without scanning the table twice. Merge by
-    summing out the side (`merge_quantile_state_sides`)."""
+    """Per-(key, side) mergeable quantile states in ONE scan:
+    fixed-grid histogram counts over integer cents, (key, bin, _side,
+    n) with bin = (c - c mod w)/w clamped to [0, n_bins) — the
+    subtract-mod form makes the floor-division an EXACT-multiple IEEE
+    division, identical in every engine (a bare float divide could
+    round across a bin boundary). Counts are integers, so states merge
+    by addition — the quantile analogue of agg_state, and the reason
+    percentile refresh at 100 TB touches only the delta. ``side_col``
+    (e.g. a base-vs-delta flag) is an extra group key — the stacked
+    form of two separate state builds, without scanning the table
+    twice. Merge by summing out the side
+    (`merge_quantile_state_sides`)."""
     cents = F.floor(F.col(value_col) * 100).cast("long")
     c = F.greatest(cents - F.lit(lo_cents), F.lit(0))
     bin_ = F.least(

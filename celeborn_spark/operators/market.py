@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import _spread
+
 
 def cooccurrence_lift(
     df: DataFrame, basket_col: str, item_col: str, k: int = 25
@@ -143,8 +145,6 @@ def item_neighbors(
     pair aggregate has a single consumer, so the former union of two
     reads (and the eager checkpoint job it required) is gone."""
     from pyspark.sql import Window as W
-
-    from celeborn_spark.operators.dedup import _spread
 
     # the collect_set PARTIAL agg runs on the scan's partitioning — a
     # single-split input serializes the set-build onto one core;

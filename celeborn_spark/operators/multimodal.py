@@ -22,22 +22,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import _spread
+
 DECODE_SCHEMA = (
     "doc_id long, n_bytes long, format string, fake_width int, fake_height int"
 )
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-exchange a NARROW input across all cores before a
-    CPU-heavy Arrow kernel — small parquet arrives as one split,
-    which would serialize the whole mapInPandas stage onto one task
-    (same rule as operators/dedup.py _spread; like it, SKIPPED when
-    the scan is already at least core-count wide — r13)."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, key)
 
 
 def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -15,21 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-exchange a NARROW input across all cores before a CPU-heavy
-    vector-kernel map stage (higher-order-function cosines cost ~20 µs
-    per 64-dim pair — a single-split 2k-row parquet scan serializes the
-    whole corpus onto one core; measured r13: the near-dup recall guard
-    spent 2.8 s on one task). Conditional: when the scan is already at
-    least as wide as the core count (the 100 TB regime) this is a
-    no-op, preserving the zero-shuffle map-only plans the signature
-    operators advertise."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, key)
+from celeborn_spark.operators import _spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -170,47 +156,6 @@ def brute_force_topk(
         .filter(F.col("rnk") <= k)
         .select(query_id_col, id_col, "cosine", "rnk")
     )
-
-
-def embedding_bit_signature(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 16,
-    dims: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane bit signature (SimHash for vectors): bit b =
-    sign(v . r_b) with pseudo-random hyperplane r_b derived
-    deterministically from xxhash64(dim, b). Cosine-similar vectors
-    agree on most bits, so equal signatures bucket near-duplicates.
-
-    Plan shape: MAP-ONLY — the hyperplane weights are constant-foldable
-    literal expressions (xxhash64 of literals), so each bit's dot
-    product is one codegen'd zip_with/aggregate over the row's own
-    array and the operator needs NO exchange at all (the previous
-    posexplode+groupBy form shuffled rows x dims; at 100 TB a
-    zero-shuffle signature stage is the difference between a map pass
-    and an exchange of the widest relation in the pipeline). The
-    left-to-right aggregate accumulation is also MORE deterministic
-    than the old partial-agg sum: bit values near zero no longer
-    depend on partition order. Weight values are unchanged
-    ((xxhash64(pos, b) mod 2001 - 1000)/1000), so signatures are
-    bit-identical to the exploded form on well-separated dots.
-
-    ``dims`` (vector length) is peeked from the first row when not
-    given — one tiny driver action at plan time."""
-    if dims is None:
-        dims = _peek_dims(vectors, vec_col)
-    # bits x dims multiplies per row — spread a narrow scan first
-    # (no-op on already-wide inputs, keeping the map-only plan claim).
-    # The RAW array column rides through (per-element scalar casts in
-    # the expression — see dot_expr).
-    v = _spread(
-        vectors.select(F.col(id_col), F.col(vec_col).alias("v")),
-        id_col,
-    )
-    signature = _signature_expr(_xx_weight_sql, dims, bits)
-    return v.select(F.col(id_col), F.expr(signature).alias("signature"))
 
 
 def _peek_dims(vectors: DataFrame, vec_col: str) -> int:

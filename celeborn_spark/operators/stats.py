@@ -982,6 +982,40 @@ def kl_divergence_oracle_sql(
     """
 
 
+def _contingency(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
+    """The (row_col x col_col) contingency table, one row per observed
+    cell with its marginals: (c, r, o, rt, ct, n, nr, nc) — o the cell
+    count, rt/ct the row/column totals, n the grand total, nr/nc the
+    distinct row/column levels. Shared by the chi-square, Cramér's V
+    and the G-test.
+
+    Scale shape: ONE map-combined count aggregate over the data; the
+    marginals and the broadcast joins run over the CELL relation
+    (|rows| x |cols| sized), never the row mass."""
+    # the contingency table is referenced four times (both marginals +
+    # the scalar totals + the term join) — checkpoint the corpus-wide
+    # count aggregate once (the localCheckpoint-inputs rule; lazy
+    # evaluation re-scanned the row mass per reference)
+    cells = (
+        df.select(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
+        .groupBy("r", "c")
+        .agg(F.count(F.lit(1)).cast("long").alias("o"))
+        .persist()
+    )
+    rows = cells.groupBy("r").agg(F.sum("o").alias("rt"))
+    colsm = cells.groupBy("c").agg(F.sum("o").alias("ct"))
+    n = cells.agg(
+        F.sum("o").alias("n"),
+        F.count_distinct("r").alias("nr"),
+        F.count_distinct("c").alias("nc"),
+    )
+    return (
+        cells.join(F.broadcast(rows), "r")
+        .join(F.broadcast(colsm), "c")
+        .crossJoin(F.broadcast(n))
+    )
+
+
 def chi_square_independence(
     df: DataFrame, row_col: str, col_col: str, dp: int = 4
 ) -> DataFrame:
@@ -1002,23 +1036,6 @@ def chi_square_independence(
     Scale shape: ONE map-combined count aggregate over the data; the
     marginals and the chi2 sum run over the CELL relation (|rows| x
     |cols| sized), never the row mass."""
-    # the contingency table is referenced four times (both marginals +
-    # the scalar totals + the term join) — checkpoint the corpus-wide
-    # count aggregate once (the localCheckpoint-inputs rule; lazy
-    # evaluation re-scanned the row mass per reference)
-    cells = (
-        df.select(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
-        .groupBy("r", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .persist()
-    )
-    rows = cells.groupBy("r").agg(F.sum("o").alias("rt"))
-    colsm = cells.groupBy("c").agg(F.sum("o").alias("ct"))
-    n = cells.agg(
-        F.sum("o").alias("n"),
-        F.count_distinct("r").alias("nr"),
-        F.count_distinct("c").alias("nc"),
-    )
     d = (
         F.col("o").cast("double") * F.col("n")
         - F.col("rt").cast("double") * F.col("ct")
@@ -1027,9 +1044,7 @@ def chi_square_independence(
         F.col("n").cast("double") * F.col("rt") * F.col("ct")
     )
     return (
-        cells.join(F.broadcast(rows), "r")
-        .join(F.broadcast(colsm), "c")
-        .crossJoin(F.broadcast(n))
+        _contingency(df, row_col, col_col)
         .agg(
             F.round(F.sum(term), dp).alias("chi2"),
             ((F.max("nr") - 1) * (F.max("nc") - 1))
@@ -1537,32 +1552,13 @@ def cramers_v(
 
     Scale shape: identical to the chi-square — one map-combined count
     aggregate; everything downstream is cell-relation sized."""
-    # the contingency table is referenced four times (both marginals +
-    # the scalar totals + the term join) — checkpoint the corpus-wide
-    # count aggregate once (the localCheckpoint-inputs rule; lazy
-    # evaluation re-scanned the row mass per reference)
-    cells = (
-        df.select(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
-        .groupBy("r", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .persist()
-    )
-    rows = cells.groupBy("r").agg(F.sum("o").alias("rt"))
-    colsm = cells.groupBy("c").agg(F.sum("o").alias("ct"))
-    n = cells.agg(
-        F.sum("o").alias("n"),
-        F.count_distinct("r").alias("nr"),
-        F.count_distinct("c").alias("nc"),
-    )
     d = (
         F.col("o").cast("double") * F.col("n")
         - F.col("rt").cast("double") * F.col("ct")
     )
     term = d * d / (F.col("n").cast("double") * F.col("rt") * F.col("ct"))
     return (
-        cells.join(F.broadcast(rows), "r")
-        .join(F.broadcast(colsm), "c")
-        .crossJoin(F.broadcast(n))
+        _contingency(df, row_col, col_col)
         .agg(
             F.sum(term).alias("chi2"),
             F.max("n").alias("nn"),
@@ -1794,30 +1790,11 @@ def g_test(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
 
     Scale shape: identical to the chi-square — one map-combined count
     aggregate; everything downstream is cell-relation sized."""
-    # the contingency table is referenced four times (both marginals +
-    # the scalar totals + the term join) — checkpoint the corpus-wide
-    # count aggregate once (the localCheckpoint-inputs rule; lazy
-    # evaluation re-scanned the row mass per reference)
-    cells = (
-        df.select(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
-        .groupBy("r", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .persist()
-    )
-    rows = cells.groupBy("r").agg(F.sum("o").alias("rt"))
-    colsm = cells.groupBy("c").agg(F.sum("o").alias("ct"))
-    n = cells.agg(
-        F.sum("o").alias("n"),
-        F.count_distinct("r").alias("nr"),
-        F.count_distinct("c").alias("nc"),
-    )
     term = 2.0 * F.col("o") * F.log(
         (F.col("o") * F.col("n")).cast("double") / (F.col("rt") * F.col("ct"))
     )
     return (
-        cells.join(F.broadcast(rows), "r")
-        .join(F.broadcast(colsm), "c")
-        .crossJoin(F.broadcast(n))
+        _contingency(df, row_col, col_col)
         .agg(
             F.round(F.sum(term), 6).alias("g_stat"),
             ((F.max("nr") - 1) * (F.max("nc") - 1)).cast("long").alias("dof"),

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from celeborn_spark.operators import _spread
+
 # Tiny deterministic stopword lists for the n-gram language heuristic.
 # Real pipelines would plug fasttext/cld3 in via a pandas_udf; the
 # heuristic keeps the operator orac­le-expressible in plain SQL.
@@ -207,8 +209,6 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Shape: explode bigrams -> count per (doc, bigram) -> per-doc
     max/sum. Docs with <2 tokens drop out (no bigram mass to measure).
     Fractions are RAW double quotients (see distinct_token_ratio)."""
-    from celeborn_spark.operators.dedup import _spread
-
     df = _spread(df, id_col)
     b = df.select(F.col(id_col), F.explode(bigrams(text_col)).alias("bg"))
     per_bg = b.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("n"))
@@ -236,8 +236,6 @@ def tfidf_topk(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFra
     term key when the vocabulary is corpus-scale. Scores are rounded to
     6 dp and ranked with a term tiebreaker so ranking is total and
     engine-independent (ln differs only past the rounding point)."""
-    from celeborn_spark.operators.dedup import _spread
-
     toks = _spread(df, id_col).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("tok")
     )
@@ -265,8 +263,6 @@ def bigram_topk(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
     """Global top-k bigrams: the n-gram generalization of word-count
     top-k (one exchange on the bigram key, map-side partial counts,
     TakeOrderedAndProject for the limit)."""
-    from celeborn_spark.operators.dedup import _spread
-
     return (
         _spread(df, text_col).select(F.explode(bigrams(text_col)).alias("bg"))
         .groupBy("bg")
@@ -301,8 +297,6 @@ def bm25_topk(
     one double expression is mirrored token-for-token in the DuckDB
     oracle and rounded to 6 dp after the per-doc sum, so accumulation
     order cannot flip the hash."""
-    from celeborn_spark.operators.dedup import _spread
-
     spread = _spread(df, id_col)
     t = spread.select(F.col(id_col), tokens(text_col).alias("toks"))
     dl = t.select(id_col, F.size("toks").alias("dl"))
@@ -417,8 +411,6 @@ def pmi_bigrams(
     discipline). min_count drops the long noise tail BEFORE the joins —
     at 100 TB this is also the hot-key guard (rare-bigram mass never
     reaches the exchange)."""
-    from celeborn_spark.operators.dedup import _spread
-
     spread = _spread(df, text_col)
     # both count tables are vocab-sized and multi-referenced (uni: the
     # scalar total + two join sides; bg: the total + the scored scan) —
@@ -749,8 +741,6 @@ def cms_heavy_hitters(
     the token stream; the exact top-k (the expensive vocabulary-sized
     side at 100 TB) is here only to label the readout and rides the
     existing heavy-hitter TakeOrderedAndProject path."""
-    from celeborn_spark.operators.dedup import _spread
-
     # 4 md5 calls per token ride the scan's partitioning — spread a
     # single-split input across cores first (conditional no-op on wide
     # scans; the r13 batch-9 discipline)
@@ -1005,8 +995,6 @@ def sparse_cosine_pairs(
 
     One exchange for tf, one vocabulary-keyed join for df, one
     term-keyed pair join + pair-keyed aggregate."""
-    from celeborn_spark.operators.dedup import _spread
-
     blk = F.col(block_col) if block_col else F.lit(0)
     toks = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
@@ -2182,8 +2170,6 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     Every predicate compares exact BIGINTs — zero float anywhere.
     Scale shape: one explode -> (doc, token) count aggregate -> one
     per-doc reduce; both map-side combined, output one row per doc."""
-    from celeborn_spark.operators.dedup import _spread
-
     toks = _spread(docs.select("doc_id", "lang", "text"), "doc_id").select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
     )
@@ -2288,8 +2274,6 @@ def heaps_law(
 
     Scale shape (100 TB): one tokenize+explode pass, one token-keyed
     aggregate (the vocabulary relation), slice counts map-combined."""
-    from celeborn_spark.operators.dedup import _spread
-
     bounds = df.agg(
         F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
     )
@@ -2457,8 +2441,6 @@ def yule_k(docs: DataFrame, text_col: str, dp: int = 6) -> DataFrame:
 
     Scale shape (100 TB): explode -> ONE map-combined (token) count
     -> one scalar reduce. Nothing row-sized past the first exchange."""
-    from celeborn_spark.operators.dedup import _spread
-
     wc = (
         _spread(docs.select(F.col(text_col)), text_col)
         .select(F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -2620,8 +2602,6 @@ def char_trigram_entropy(
     Scale shape (100 TB): one position fan-out -> ONE map-combined
     (facet, trigram) count; everything downstream is vocabulary-
     bounded."""
-    from celeborn_spark.operators.dedup import _spread
-
     # the per-position substring fan-out rides the scan's partitioning —
     # spread a single-split input across cores first (conditional no-op
     # on wide scans; the r13 batch-9 discipline)

@@ -253,7 +253,7 @@ def q_incremental_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (key x <=256 bins) state. The estimate rule (lower edge of the
     first bin reaching rank ceil(q*n)) is all-integer; the oracle
     recomputes from the FULL table, so equality proves histogram
-    mergeability (operators/incremental.quantile_state)."""
+    mergeability (operators/incremental.quantile_state_sides)."""
     li = load_table(spark, sf_dir, "lineitem")
     cutoff = F.lit(_CUTOFF).cast("timestamp")
     # base-vs-delta states build in ONE scan (stacked on a side flag —

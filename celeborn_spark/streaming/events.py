@@ -10,87 +10,42 @@ maps to checkpointLocation.
 For tests/oracle runs, a finite parquet directory drives the stream to
 completion synchronously (memory sink + processAllAvailable) — the
 same operators attach unchanged to kafka/socket sources in production.
+The events stream reads ts exactly as the batch catalog does: it pins
+the schema ``catalog.load_table``'s scan inferred and normalizes ts
+with the same ``catalog.normalize_events_ts`` dispatch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from celeborn_spark.catalog import table_path
-
-def _events_raw_schema(sf_dir: str):
-    """Streaming sources never infer, so the pinned schema must match the
-    parquet's actual physical ts flavor — derived from a footer read (no
-    Spark job). TIMESTAMP(NANOS) arrives as long under nanosAsLong and
-    needs div-1000 truncation; TIMESTAMP(MICROS, naive) arrives as NTZ
-    and needs only a session-TZ cast (identity under pinned UTC);
-    legacy INT96 (the Spark <4 writer default — any pre-existing
-    Spark-written events directory) reads natively as TimestampType.
-    INT96 must be tested on the PHYSICAL type: pyarrow's schema_arrow
-    surfaces INT96 as timestamp[ns], which the unit check alone would
-    misclassify as TIMESTAMP(NANOS) and pin LongType — the stream then
-    dies on PARQUET_COLUMN_DATA_TYPE_MISMATCH (caught by the r10
-    batch-21 probe on Spark-written replicas)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = table_path(sf_dir, "events")
-    if os.path.isdir(path):
-        # real-world events tables are DIRECTORIES of part files (any
-        # Spark-written layout, the scale-probe replicas included) —
-        # probe the first part's footer; all parts share one schema
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            raise FileNotFoundError(f"no parquet parts under {path}")
-        path = parts[0]
-    pf = pq.ParquetFile(path)
-    ts_idx = next(
-        i for i in range(len(pf.schema)) if pf.schema.column(i).name == "ts"
-    )
-    int96 = pf.schema.column(ts_idx).physical_type == "INT96"
-    arrow_ts = pf.schema_arrow.field("ts").type
-    nanos = not int96 and getattr(arrow_ts, "unit", None) == "ns"
-    ts_field = T.StructField(
-        "ts",
-        T.LongType()
-        if nanos
-        else (T.TimestampType() if int96 else T.TimestampNTZType()),
-    )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            ts_field,
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    return schema, nanos
+from celeborn_spark.catalog import (
+    _pin_session_confs,
+    _read_parquet,
+    normalize_events_ts,
+    table_path,
+)
 
 
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """events as an unbounded stream (file source; schema pinned —
-    streaming sources never infer)."""
-    schema, nanos = _events_raw_schema(sf_dir)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(schema)
+    """events as an unbounded stream (file source). Streaming sources
+    never infer, so the stream pins the raw schema the batch scan
+    inferred (memoized per file stamp by the catalog; the confs are
+    pinned first so a TIMESTAMP(NANOS) ts infers as long), and ts is
+    normalized by the same dispatch as ``load_table`` — batch and
+    stream cannot disagree on the physical flavor."""
+    _pin_session_confs(spark)
+    path = table_path(sf_dir, "events")
+    reader = spark.readStream.schema(_read_parquet(spark, path).schema)
     if max_files_per_trigger:
         # micro-batch flow control — the engine-side analogue of the
         # reference's credit-based read (CreditStreamManager.java:80)
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     # file streaming source needs a directory or glob, not a bare file
-    raw = reader.parquet(table_path(sf_dir, "events").replace("events.parquet", "events.*"))
-    if nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    raw = reader.parquet(path.replace("events.parquet", "events.*"))
+    return normalize_events_ts(raw)
 
 
 def read_offset_stream(

@@ -80,9 +80,8 @@ SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".sf1")
 K = 10
 
-# Key shifts per replica — same disjoint-population scheme the r9
-# probe uses (scripts/scale_probe_r9.py SHIFTS), all tables included
-# so any query runs (the r9 q_homophily lesson: a missing replica
+# Key shifts per replica — a disjoint population per copy, all tables
+# included so any query runs (the r9 q_homophily lesson: a missing replica
 # table crashes the probe).
 SHIFTS = {
     "region": {"r_regionkey": 1_000},

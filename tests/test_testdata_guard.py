@@ -5,8 +5,8 @@ Round 3 lesson: the driver regenerated events.parquet with ts as
 TIMESTAMP(MICROS) (round 1-2 data was TIMESTAMP(NANOS)) and the change
 surfaced as 39 scattered failures. This test makes the next testdata
 regeneration fail loudly in one obvious place instead. The engine itself
-(catalog.load_table, streaming/events._events_raw_schema) dispatches on
-the actual flavor, so a ts-unit change alone should NOT fail here —
+(catalog.normalize_events_ts, shared by load_table and the events
+stream) dispatches on the actual flavor, so a ts-unit change alone should NOT fail here —
 only genuinely new drift (renamed/added/dropped columns, type changes)
 should.
 """

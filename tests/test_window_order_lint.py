@@ -221,3 +221,24 @@ def test_driver_collect_sites_document_boundedness():
         "relation is cardinality-bounded, or keep it distributed):\n"
         + "\n".join(offenders)
     )
+
+
+# Fourth companion: each engine decision has one home. A top-level
+# function defined in two modules is a copy that drifts (three copies
+# of the narrow-input _spread once lived in dedup, similarity and
+# multimodal); shared helpers live in one module and are imported.
+def test_top_level_function_names_are_defined_once():
+    import ast
+    from collections import defaultdict
+
+    homes = defaultdict(list)
+    for p in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                homes[node.name].append(str(p.relative_to(PKG)))
+    dups = {name: mods for name, mods in homes.items() if len(mods) > 1}
+    assert not dups, (
+        "top-level functions defined in more than one module under "
+        "celeborn_spark/ (keep one definition and import it):\n"
+        + "\n".join(f"{n}: {', '.join(m)}" for n, m in sorted(dups.items()))
+    )
