@@ -6,9 +6,9 @@ TIMESTAMP(MICROS) (round 1-2 data was TIMESTAMP(NANOS)) and the change
 surfaced as 39 scattered failures. This test makes the next testdata
 regeneration fail loudly in one obvious place instead. The engine itself
 (catalog.normalize_events_ts, shared by load_table and the events
-stream) dispatches on the actual flavor, so a ts-unit change alone should NOT fail here —
-only genuinely new drift (renamed/added/dropped columns, type changes)
-should.
+stream) dispatches on the actual flavor, so a ts-unit change alone
+should NOT fail here — only genuinely new drift (renamed/added/dropped
+columns, type changes) should.
 """
 
 from __future__ import annotations
