@@ -46,6 +46,25 @@ def values_table(spark, rows, schema: str):
     return spark.sql(f"SELECT {casts} FROM VALUES {vals} AS t({names})")
 
 
+_HELD: list = []
+
+
+def hold(df):
+    """Persist ``df`` until the next registered query is invoked (the
+    registry calls release_held() first), so a rerun re-reads its files,
+    which the CacheManager matches by path, not content. Local
+    checkpoints are never held: their rows have no other copy."""
+    _HELD.append(df)
+    return df.persist()
+
+
+def release_held() -> None:
+    while _HELD:
+        df = _HELD.pop()
+        if df.sparkSession.sparkContext._jsc is not None:  # stop() freed it
+            df.unpersist()
+
+
 def _spread(df, key: str):
     """Hash-exchange a NARROW input across all cores before a CPU-heavy
     map stage (text kernels, Arrow mapInPandas, higher-order-function

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from celeborn_spark.operators import hold
+
 
 def naive_bayes_confusion(
     docs: DataFrame, id_col: str, text_col: str, label_col: str, dp: int = 6
@@ -345,7 +347,7 @@ def classification_report(conf: DataFrame, dp: int = 6) -> DataFrame:
         p.alias("precision"),
         r.alias("recall"),
         f1.alias("f1"),
-    ).persist()  # bounded class catalog; feeds totals + output
+    ).transform(hold)  # bounded class catalog; feeds totals + output
     # accuracy folds onto the same bounded rows relation: sum of the
     # per-class tp is the diagonal total and sum of support is the doc
     # total — identical BIGINTs to the former second pass over conf,

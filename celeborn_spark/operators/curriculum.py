@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from celeborn_spark.operators import hold
 from celeborn_spark.operators.sampling import _HEX_DIGITS, _SPACE, hash_bucket
 
 
@@ -178,7 +179,7 @@ def mixture_waterfill(
     counts = (
         df.groupBy(F.col(group_col).alias("grp"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .persist()  # feeds k/total AND the walk
+        .transform(hold)  # feeds k/total AND the walk
     )
     tot = counts.agg(F.count(F.lit(1)).cast("long").alias("k"))
     wr = W.orderBy("grp")
@@ -193,7 +194,7 @@ def mixture_waterfill(
             + (F.col("rn") <= F.lit(budget) % F.col("k")).cast("long"),
         )
         .withColumn("alloc1", F.least(F.col("n_docs"), F.col("quota")))
-        .persist()  # feeds the leftover total AND the refill walk
+        .transform(hold)  # feeds the leftover total AND the refill walk
     )
     left = phase1.agg(
         (b - F.sum("alloc1")).cast("long").alias("leftover")

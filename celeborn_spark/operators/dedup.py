@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from celeborn_spark.operators import _spread
+from celeborn_spark.operators import _spread, hold
 from celeborn_spark.operators.textops import tokens
 
 
@@ -259,10 +259,8 @@ def jaccard_pairs(
     rounds below threshold could never survive. Identical output pairs
     and values; strictly fewer rows ride the (id_a, id_b) exchange.
     """
-    # the posting list feeds both join sides — materialize it once
-    # (localCheckpoint = executor-local materialization, the same
-    # reuse pattern as components.py) instead of re-exploding 2x
-    sh = shingle_table(df, id_col, text_col, n, with_size=True).persist()
+    # the posting list feeds both join sides — hold it, not re-explode 2x
+    sh = shingle_table(df, id_col, text_col, n, with_size=True).transform(hold)
     joinable = sh if max_shingle_freq is None else drop_hot_shingles(sh, max_shingle_freq)
 
     a = joinable.select(
@@ -444,8 +442,8 @@ def incremental_lsh_near_dup(
     batch-sized × bucket occupancy, NOT corpus self-pairs — and only
     candidates pay the exact-Jaccard verification (shingle joins with
     map-side counts)."""
-    sh_c = shingle_table(corpus, id_col, text_col, n).persist()
-    sh_b = shingle_table(batch, id_col, text_col, n).persist()
+    sh_c = shingle_table(corpus, id_col, text_col, n).transform(hold)
+    sh_b = shingle_table(batch, id_col, text_col, n).transform(hold)
     bc = banded_signatures(
         corpus, id_col, text_col, n, num_hashes, bands, hash_kind, shingles=sh_c
     )
@@ -512,7 +510,7 @@ def verified_lsh_dedup(
     generation and the verification join (drop_hot_shingles)."""
     # one materialized posting list feeds signature lanes, sizes and
     # both verification join sides (otherwise re-exploded 4x)
-    sh = shingle_table(df, id_col, text_col, n).persist()
+    sh = shingle_table(df, id_col, text_col, n).transform(hold)
     cand = minhash_lsh_candidates(
         df, id_col, text_col, n, num_hashes, bands, hash_kind, max_shingle_freq,
         shingles=sh,
@@ -685,7 +683,7 @@ def dup_span_profile(
     docs join it on the span key and aggregate back per doc — no
     pair-space is ever materialized, so the profile is linear where
     pairwise dedup is quadratic."""
-    sh = shingle_table(df, id_col, text_col, n).persist()
+    sh = shingle_table(df, id_col, text_col, n).transform(hold)
     df_counts = sh.groupBy("shingle").agg(
         F.count_distinct(id_col).alias("_df")
     )
@@ -786,7 +784,7 @@ def set_similarity_join(
         )
         # sets + prefixes feed three branches (prefix explode x2 via
         # self-join + verification join-back) — materialize once
-        .persist()
+        .transform(hold)
     )
     if strategy not in ("auto", "prefix", "length"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -1140,7 +1138,7 @@ def containment_join(
     — a strict lower bound, same contract as jaccard_pairs). Pairs are
     DIRECTED, so both orders of each unordered pair are evaluated from
     the one n_common relation — no second join."""
-    sh = shingle_table(df, id_col, text_col, n).persist()
+    sh = shingle_table(df, id_col, text_col, n).transform(hold)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     joinable = sh if max_shingle_freq is None else drop_hot_shingles(sh, max_shingle_freq)
 
@@ -1265,7 +1263,7 @@ def minhash_accuracy(
         sh.select(F.col(id_col).alias("doc"), "shingle")
         .groupBy("doc")
         .agg(*[F.min(md5_lane(s)).alias(f"m{s}") for s in range(num_hashes)])
-        .persist()  # bands + both pair sides read it
+        .transform(hold)  # bands + both pair sides read it
     )
     banded = sig.select(
         "doc",
@@ -1301,7 +1299,7 @@ def minhash_accuracy(
         .orderBy("_r")
         .limit(panel_k)
         .drop("_r")
-        .persist()  # est join + exact join both read it
+        .transform(hold)  # est join + exact join both read it
     )
     siga = sig.select(
         F.col("doc").alias("id_a"), *[F.col(f"m{s}").alias(f"a{s}") for s in range(num_hashes)]
@@ -1323,7 +1321,7 @@ def minhash_accuracy(
         .unionAll(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sh_panel = sh.join(F.broadcast(panel_ids), id_col, "leftsemi").persist()
+    sh_panel = sh.join(F.broadcast(panel_ids), id_col, "leftsemi").transform(hold)
     sizes = sh_panel.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_sh")
     )

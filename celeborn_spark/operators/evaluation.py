@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import hold
+
 __all__ = [
     "cuped_adjustment",
     "cuped_oracle_sql",
@@ -372,7 +374,7 @@ def pr_curve(
             F.count(F.lit(1)).cast("long").alias("cnt"),
             F.sum(F.col(label_col)).cast("long").alias("pos"),
         )
-        .persist()
+        .transform(hold)
     )
     tot = hist.agg(
         F.sum("cnt").cast("long").alias("tot_rows"),
@@ -419,7 +421,7 @@ def pr_curve(
                 * (F.col("cum_pos") / F.col("cum_rows"))
             ).alias("term"),
         )
-    ).persist()
+    ).transform(hold)
     area = curve.agg(F.round(F.sum("term"), 6).alias("auprc"))
     return curve.crossJoin(F.broadcast(area)).select(
         "bucket", "cum_rows", "cum_pos", "precision", "recall", "auprc"
@@ -747,7 +749,7 @@ def hellinger_distance(
             F.sum(c).cast("long").alias("ca"),
             F.sum(1 - c).cast("long").alias("cb"),
         )
-        .persist()
+        .transform(hold)
     )
     tot = per_cat.agg(
         F.sum("ca").cast("long").alias("n_a"),
@@ -1019,7 +1021,7 @@ def pettitt_changepoint(
     daily = (
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.sum(F.col(metric_col)).cast("long").alias("m"))
-        .persist()
+        .transform(hold)
     )
     hist = daily.groupBy("m").agg(F.count(F.lit(1)).cast("long").alias("c"))
     wr = Window.orderBy("m").rowsBetween(Window.unboundedPreceding, -1)
@@ -1142,19 +1144,19 @@ def hodges_lehmann_shift(
         base.filter(F.col("grp") == a)
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("ca"))
-        .persist()
+        .transform(hold)
     )
     hb = (
         base.filter(F.col("grp") == b)
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("cb"))
-        .persist()
+        .transform(hold)
     )
     diffs = (
         ha.crossJoin(hb.select(F.col("v").alias("vb"), "cb"))
         .groupBy((F.col("v") - F.col("vb")).alias("d"))
         .agg(F.sum(F.col("ca") * F.col("cb")).cast("long").alias("wt"))
-        .persist()
+        .transform(hold)
     )
     tot = diffs.agg(F.sum("wt").cast("long").alias("w_tot"))
     wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
@@ -1245,7 +1247,7 @@ def brier_decomposition(
             F.sum("label").cast("long").alias("pos"),
             F.sum("s").cast("long").alias("cents"),
         )
-        .persist()
+        .transform(hold)
     )
     tot = per_bin.agg(
         F.sum("n_b").cast("long").alias("n_tot"),
@@ -1762,7 +1764,7 @@ def conformal_interval(
     daily = (
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.sum(F.col(metric_col)).cast("long").alias("m"))
-        .persist()  # feeds both sides of the 7-day lag join
+        .transform(hold)  # feeds both sides of the 7-day lag join
     )
     lagged = daily.alias("cur").join(
         daily.alias("prev"),
@@ -1770,7 +1772,7 @@ def conformal_interval(
     )
     resid = lagged.select(
         F.abs(F.col("cur.m") - F.col("prev.m")).alias("r")
-    ).persist()  # feeds the histogram AND the coverage count
+    ).transform(hold)  # feeds the histogram AND the coverage count
     hist = resid.groupBy("r").agg(F.count(F.lit(1)).cast("long").alias("c"))
     wc = W.orderBy("r").rowsBetween(W.unboundedPreceding, 0)
     tot = resid.agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -1877,7 +1879,7 @@ def mix_drift_series(
             F.col(day_col).alias("day"), F.col(cat_col).alias("cat")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds both sides of the adjacent-day join
+        .transform(hold)  # feeds both sides of the adjacent-day join
     )
     # dense category union per adjacent-day pair: full outer on cat
     cur = cells.select(
@@ -2023,7 +2025,7 @@ def hosmer_lemeshow(
             F.sum("s").cast("long").alias("exp_cents"),
         )
         # <= n_bins rows, referenced by the total AND the output
-        .persist()
+        .transform(hold)
     )
     dd = (
         F.lit(denom_cents) * F.col("obs_pos") - F.col("exp_cents")
@@ -2152,7 +2154,7 @@ def isotonic_calibration(
             F.sum("n").over(w).alias("cn"),
             F.sum("pos").over(w).alias("cp"),
         )
-        .persist()
+        .transform(hold)
     )
     lane_i = pre.select(
         F.col("bin").alias("i"), F.col("n").alias("n_i"), F.col("pos").alias("pos_i")
@@ -2721,7 +2723,7 @@ def topk_overlap_curve(
     # list-sized (<= max(ks) rows) and referenced once per depth —
     # materialize so the per-k union branches don't re-run the
     # upstream heap-selects.
-    joined = joined.persist()
+    joined = joined.transform(hold)
     rows = None
     for k in ks:
         row = joined.agg(

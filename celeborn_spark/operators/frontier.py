@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from celeborn_spark.operators import hold
+
 
 def _prune(df: DataFrame, part: Column, x: str = "x", y: str = "y") -> DataFrame:
     """Drop rows dominated by another row in the same `part` group."""
@@ -71,7 +73,7 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     # running the whole stage-1 prune once per reference. The RAW
     # input is deliberately NOT materialized — re-scanning pruned
     # parquet twice beats writing the full table once at 100 TB.
-    local = _prune(base, grp, "_x", "_y").persist()
+    local = _prune(base, grp, "_x", "_y").transform(hold)
     out = _prune(local, F.lit(0), "_x", "_y")
     return out.drop("_x", "_y")
 

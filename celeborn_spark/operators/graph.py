@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import hold
+
 DAMPING = 0.85
 
 
@@ -69,12 +71,12 @@ def pagerank(
     round then costs exactly one exchange (the groupBy(dst) combine of
     edge contributions, with map-side partials absorbing power-law
     in-degree hubs). For graphs whose node set outgrows broadcast, pass
-    ``partition_edges=True`` (which disables the hint) to
-    hash-partition+persist the edge relation by src once, so every
-    round's (then sort-merge) rank join reuses that layout and only the
-    node-sized rank relation crosses the wire. The per-term pr/outdeg
-    stays a DIVISION — the oracle divides too, and pr*(1/outdeg) rounds
-    differently in the last ulp.
+    ``partition_edges=True`` (which disables the hint) to hash-partition
+    the edge relation by src once and hold it (operators.hold) for the
+    invocation, so every round's (then sort-merge) rank join reuses that
+    layout and only the node-sized rank relation crosses the wire. The
+    per-term pr/outdeg stays a DIVISION — the oracle divides too, and
+    pr*(1/outdeg) rounds differently in the last ulp.
 
     ``weight_col`` names a positive edge-weight column: contributions
     become pr * w / sum_w(src) (the weighted random surfer). Unweighted
@@ -91,16 +93,10 @@ def pagerank(
     if partition_edges:
         raw = raw.repartition(
             edges.sparkSession.sparkContext.defaultParallelism, "src"
-        ).persist()
+        ).transform(hold)
         broadcast_ranks = False  # partitioned layout IS the join plan
     if handle_dangling:
-        return _pagerank_dangling(
-            raw,
-            iters,
-            damping,
-            unpersist_edges=partition_edges,
-            broadcast_ranks=broadcast_ranks,
-        )
+        return _pagerank_dangling(raw, iters, damping, broadcast_ranks)
     deg = raw.groupBy("src").agg(F.sum("ew").alias("outdeg"))
     e = raw.join(F.broadcast(deg) if broadcast_ranks else deg, "src")
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("pr"))
@@ -114,13 +110,6 @@ def pagerank(
         # bound plan depth/analysis cost on long runs.
         if (i + 1) % 5 == 0 and (i + 1) < iters:
             ranks = ranks.localCheckpoint(eager=False)
-    if partition_edges:
-        # materialize BEFORE dropping the edge cache — the plan is
-        # lazy, and unpersisting first would force a full edge rebuild
-        # per round (EAGER here by design; the default path returns the
-        # lazy chain and lets the caller's single action run it, r14)
-        ranks = ranks.localCheckpoint()
-        raw.unpersist()
     return ranks
 
 
@@ -149,11 +138,7 @@ def _pagerank_round(
 
 
 def _pagerank_dangling(
-    raw: DataFrame,
-    iters: int,
-    damping: float,
-    unpersist_edges: bool = False,
-    broadcast_ranks: bool = True,
+    raw: DataFrame, iters: int, damping: float, broadcast_ranks: bool
 ) -> DataFrame:
     """Dangling-aware rounds: node universe = src ∪ dst; each round adds
     the summed dangler rank, split uniformly, into every node's affine
@@ -163,9 +148,9 @@ def _pagerank_dangling(
     Per-round cost: the in-contribution groupBy(dst) exchange (same as
     the default path) + a tiny dangler-sum aggregate. Each round's rank
     relation is referenced twice (contribs + dangler sum), so it is
-    persist()ed — lazily: the final single action materializes each
-    round once and the second branch reads the cache, instead of the
-    multi-reference recompute blowup pinned in CLAUDE.md."""
+    held (operators.hold) — lazily: the caller's single action
+    materializes each round once and the second branch reads the cache,
+    instead of the multi-reference recompute blowup pinned in CLAUDE.md."""
     nodes = (
         raw.select(F.col("src").alias("node"))
         .union(raw.select(F.col("dst").alias("node")))
@@ -181,10 +166,8 @@ def _pagerank_dangling(
     )
     n_nodes = base.agg(F.count(F.lit(1)).alias("n_nodes"))
     ranks = base.select("node", F.lit(1.0).alias("pr"))
-    cached = []
     for _ in range(iters):
-        r = ranks.join(base, "node").persist()
-        cached.append(r)
+        r = ranks.join(base, "node").transform(hold)
         dangling = r.where(F.col("outdeg").isNull()).agg(
             F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dangling_mass")
         )
@@ -216,13 +199,6 @@ def _pagerank_dangling(
                 ).alias("pr"),
             )
         )
-    # EAGER: the per-round caches (and optionally the edge layout) are
-    # unpersisted right below, so the chain must be materialized first.
-    ranks = ranks.localCheckpoint()
-    for r in cached:
-        r.unpersist()
-    if unpersist_edges:
-        raw.unpersist()
     return ranks
 
 
@@ -280,7 +256,7 @@ def directed_order_edges(
         .distinct()
     )
     if materialize == "persist":
-        return pairs.persist()
+        return pairs.transform(hold)
     return pairs.localCheckpoint(eager=False)
 
 
@@ -798,11 +774,10 @@ def hits(
     Scale shape: per round exactly two node-keyed exchanges + two
     scalar broadcasts; the edge relation is never mutated. With
     ``partition_edges=True`` it is shuffled ONCE per join direction
-    (a src-keyed and a dst-keyed persisted copy — HITS alternates join
-    keys, unlike pagerank's single-src discipline) and every round
-    reuses the cached partitioning instead of re-exchanging the edge
-    mass ``iters`` times — the option to set when the node set
-    outgrows broadcast."""
+    (src- and dst-keyed copies, held by operators.hold — HITS alternates
+    join keys, unlike pagerank) and every round reuses the cached
+    partitioning instead of re-exchanging the edge mass ``iters`` times
+    — the option to set when the node set outgrows broadcast."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     # The edge relation is referenced 2*iters+1 times (nodes + two
@@ -823,8 +798,8 @@ def hits(
     if partition_edges:
         par = edges.sparkSession.sparkContext.defaultParallelism
         e = e.localCheckpoint(eager=False)  # one materialization feeds both copies
-        e_src = e.repartition(par, "src").persist()
-        e_dst = e.repartition(par, "dst").persist()
+        e_src = e.repartition(par, "src").transform(hold)
+        e_dst = e.repartition(par, "dst").transform(hold)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -895,7 +870,7 @@ def hits(
             F.col("src").alias("node"),
             F.round(F.col("hr") / F.col("hnorm"), 6).alias("h"),
         )
-    out = (
+    return (
         nodes.join(bcast(hub), "node", "left")
         .join(bcast(auth), "node", "left")
         .select(
@@ -904,15 +879,6 @@ def hits(
             F.coalesce(F.col("a"), F.lit(0.0)).alias("auth"),
         )
     )
-    if partition_edges:
-        # materialize the state chain BEFORE dropping the edge caches —
-        # the round checkpoints are LAZY (eager=False, r14), so an
-        # unpersist here would otherwise force the final action to
-        # rebuild the partitioned layouts from scratch.
-        out = out.localCheckpoint()
-        e_src.unpersist()
-        e_dst.unpersist()
-    return out
 
 
 def hits_oracle_sql(
@@ -1007,7 +973,7 @@ def shortest_paths(
         seeds.select(F.col("node").cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .persist()
+        .transform(hold)
     )
     for _ in range(rounds):
         frontier = F.broadcast(dist) if broadcast_dist else dist
@@ -1036,7 +1002,7 @@ def shortest_paths(
                                    F.col("cand").alias("dist")))
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .persist()
+            .transform(hold)
         )
     return dist
 

@@ -24,7 +24,7 @@ prior iteration) does not grow with iters — the same discipline as
 operators/components.py label propagation. (At toy scale the cache
 machinery costs more than it saves — ~1 s at sf0.1 — but it is the
 100 TB-correct default, the same input-caching choice Spark MLlib's
-KMeans makes; the cache is released when the fit returns.)
+KMeans makes; operators.hold releases it at the next query invocation.)
 
 Determinism: seeds are the k lowest-id vectors (cluster id = seed's
 vec_id), distances are rounded to 6 dp with cluster-id tie-break, and
@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from celeborn_spark.operators import hold
 from celeborn_spark.operators.similarity import as_double_array
 
 
@@ -100,17 +101,16 @@ def update_centroids(
 def prepared_vectors(
     vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Partition the slim (id, vec) projection by id ONCE and cache it:
-    every iteration's window (partitionBy id) and assignment join reuse
-    the partitioning, so the vectors shuffle exactly once for the whole
-    fit instead of once per round. persist(), NOT localCheckpoint():
-    a checkpoint scans back as an opaque RDD with UNKNOWN partitioning
-    and Catalyst re-exchanges anyway; a cached plan keeps the
-    hashpartitioning(id) metadata (test_kmeans pins this)."""
+    """Partition the slim (id, vec) projection by id ONCE and hold it
+    (operators.hold): every round's window (partitionBy id) and
+    assignment join reuse the partitioning, so the vectors shuffle once
+    per fit. A cache, NOT localCheckpoint(): a checkpoint scans back as
+    an opaque RDD with UNKNOWN partitioning and Catalyst re-exchanges
+    anyway; a cached plan keeps hashpartitioning(id) (test_kmeans)."""
     return (
         vectors.select(F.col(id_col), as_double_array(vec_col).alias(vec_col))
         .repartition(vectors.sparkSession.sparkContext.defaultParallelism, id_col)
-        .persist()
+        .transform(hold)
     )
 
 
@@ -138,12 +138,7 @@ def lloyd_iterations(
         centroids = update_centroids(
             v, assignment, id_col, vec_col
         ).localCheckpoint()  # cut lineage: next round must not re-run this one
-    # materialize the slim final assignment, then release the vector
-    # cache — without this every fit leaks one InMemoryRelation into
-    # the executor cache for the life of the session
-    final = assign_clusters(v, centroids, id_col, vec_col).localCheckpoint()
-    v.unpersist()
-    return final
+    return assign_clusters(v, centroids, id_col, vec_col)
 
 
 def kmeans_oracle_sql(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from celeborn_spark.operators import _spread
+from celeborn_spark.operators import _spread, hold
 
 
 def cooccurrence_lift(
@@ -160,7 +160,7 @@ def item_neighbors(
         .groupBy("basket")
         .agg(F.array_sort(F.collect_set("item")).alias("items"))
         .select("items")
-        .persist()  # feeds the pair expansion AND item_n
+        .transform(hold)  # feeds the pair expansion AND item_n
     )
     # item-count-sized; materialized because BOTH direction joins read
     # it — without this the plan recomputed the whole scan+agg chain
@@ -169,7 +169,7 @@ def item_neighbors(
         arrs.select(F.explode("items").alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).cast("long").alias("n_item"))
-        .persist()
+        .transform(hold)
     )
     pairs = (
         arrs.filter(F.size("items") >= 2)

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from celeborn_spark.operators import _spread
+from celeborn_spark.operators import _spread, hold
 
 DECODE_SCHEMA = (
     "doc_id long, n_bytes long, format string, fake_width int, fake_height int"
@@ -456,7 +456,7 @@ def ahash_near_dup(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.min("doc_id").cast("long").alias("rep"),
         )
-        .persist()  # signature catalog, referenced by 4 lanes
+        .transform(hold)  # signature catalog, referenced by 4 lanes
     )
     h = sig.select(
         "rep",

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from celeborn_spark.operators import _spread
+from celeborn_spark.operators import _spread, hold
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -613,7 +613,7 @@ def knn_join(
         )
         .filter(F.col("rn") <= n_probe)
         .select(id_col, "centroid_id", "rn")
-        .persist()
+        .transform(hold)
     )
     assign_v = ranked.filter(F.col("rn") == 1).select(id_col, "centroid_id")
     assign_q = ranked.select(id_col, "centroid_id")
@@ -975,7 +975,7 @@ def cluster_medoid(
     # references re-ran the scan + label window each; materialize once
     capped = (
         pts.withColumn("rn", rn).filter(F.col("rn") <= cap).drop("rn")
-        .persist()
+        .transform(hold)
     )
     dot = F.aggregate(
         F.zip_with(F.col("i.vec"), F.col("j.vec"), lambda x, y: x * y),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from celeborn_spark.operators import hold
 from celeborn_spark.operators.sampling import _HEX_DIGITS, _SPACE, hash_bucket
 
 
@@ -101,7 +102,7 @@ def kmv_distinct(
     # the distinct-pair + hash aggregate is the heaviest exchange in
     # the pipeline; build it ONCE, materialize, and feed both the
     # sketch and the exact stats from it (ADVICE r7 — it ran twice)
-    hx = _hash_counts(df, key_col, group_col).persist()
+    hx = _hash_counts(df, key_col, group_col).transform(hold)
     sk = kmv_sketch(df, key_col, group_col, k, hx=hx)
     stats = hx.groupBy("grp").agg(
         F.sum("nk").cast("long").alias("exact_distinct"),
@@ -176,10 +177,10 @@ def kmv_overlap(
     # materialize so the hash aggregate never runs once per reference
     a = kmv_sketch(
         df_a.select(F.col(key_col)).withColumn("_g", F.lit(1)), key_col, "_g", k
-    ).persist()
+    ).transform(hold)
     b = kmv_sketch(
         df_b.select(F.col(key_col)).withColumn("_g", F.lit(1)), key_col, "_g", k
-    ).persist()
+    ).transform(hold)
     u = F.conv("h", 16, 10).cast("double") / F.lit(float(_SPACE))
 
     def theta_of(sk: DataFrame) -> DataFrame:

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from celeborn_spark.operators import hold
+
 
 def corr_matrix(df: DataFrame, cols: list[str], dp: int = 6) -> DataFrame:
     """(col_x, col_y, corr) for every unordered column pair (x < y by
@@ -917,7 +919,7 @@ def kl_divergence(
     counts = (
         occ.groupBy("g", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(hold)
     )
     vocab = counts.select("w").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
@@ -1000,7 +1002,7 @@ def _contingency(df: DataFrame, row_col: str, col_col: str) -> DataFrame:
         df.select(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
         .groupBy("r", "c")
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .persist()
+        .transform(hold)
     )
     rows = cells.groupBy("r").agg(F.sum("o").alias("rt"))
     colsm = cells.groupBy("c").agg(F.sum("o").alias("ct"))
@@ -1634,7 +1636,7 @@ def js_divergence(
     counts = (
         occ.groupBy("g", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(hold)
     )
     vocab = counts.select("w").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
@@ -2675,7 +2677,7 @@ def runs_test(df: DataFrame, day_col: str, metric_col: str, dp: int = 6) -> Data
     daily = (
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.sum(F.col(metric_col)).cast("long").alias("m"))
-        .persist()  # feeds the median histogram AND the walk
+        .transform(hold)  # feeds the median histogram AND the walk
     )
     hist = daily.groupBy("m").agg(F.count(F.lit(1)).cast("long").alias("c"))
     wcum = W.orderBy("m").rowsBetween(W.unboundedPreceding, 0)
@@ -2804,7 +2806,7 @@ def brown_forsythe(
     hist = df.groupBy(
         F.col(group_col).alias("g"),
         F.col(value_col).cast("long").alias("v"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c")).persist()
+    ).agg(F.count(F.lit(1)).cast("long").alias("c")).transform(hold)
     wcum = W.partitionBy("g").orderBy("v").rowsBetween(
         W.unboundedPreceding, 0
     )
@@ -2961,7 +2963,7 @@ def interevent_exponential(
         ))
         .filter(F.col("prev").isNotNull())
         .select(F.expr("(us - prev) div 1000000").alias("gap"))
-        .persist()  # feeds the moment aggregate AND the histogram
+        .transform(hold)  # feeds the moment aggregate AND the histogram
     )
     mom = gaps.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3065,7 +3067,7 @@ def seasonal_strength(
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.sum(F.col(metric_col)).cast("long").alias("m"))
         .select("day", "m", F.dayofweek("day").cast("long").alias("dow"))
-        .persist()  # feeds the DOW groups AND the global moments
+        .transform(hold)  # feeds the DOW groups AND the global moments
     )
     per_dow = daily.groupBy("dow").agg(
         F.sum("m").cast("long").alias("s_g"),
@@ -3268,7 +3270,7 @@ def t_closeness(
         df.select(*quasi_cols, sensitive_band.cast("long").alias("band"))
         .groupBy(*quasi_cols, "band")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds the global hist AND the grid
+        .transform(hold)  # feeds the global hist AND the grid
     )
     gband = cells.groupBy("band").agg(
         F.sum("c").cast("long").alias("gc")
@@ -3481,7 +3483,7 @@ def theil_index(
     units = (
         df.groupBy(F.col(unit_col).alias("unit"))
         .agg(F.sum(F.col(metric_col)).cast("long").alias("m"))
-        .persist()  # feeds the totals AND the walk
+        .transform(hold)  # feeds the totals AND the walk
     )
     tot = units.agg(
         F.sum("m").cast("long").alias("s_tot"),
@@ -3569,7 +3571,7 @@ def ks_bh_screen(
         )
         .groupBy("g", "band")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds the global hist AND the grid
+        .transform(hold)  # feeds the global hist AND the grid
     )
     gband = cells.groupBy("band").agg(F.sum("c").cast("long").alias("gc"))
     groups = cells.groupBy("g").agg(F.sum("c").cast("long").alias("n_g"))
@@ -3761,7 +3763,7 @@ def kruskal_wallis(
             F.col(value_col).cast("long").alias("v"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds the value histogram AND group sums
+        .transform(hold)  # feeds the value histogram AND group sums
     )
     vhist = hist.groupBy("v").agg(F.sum("c").cast("long").alias("t"))
     wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
@@ -3904,7 +3906,7 @@ def granger_leadlag(
             F.sum(x_col).cast("long").alias("x"),
             F.sum(y_col).cast("long").alias("y"),
         )
-        .persist()  # feeds both sides of the lag join
+        .transform(hold)  # feeds both sides of the lag join
     )
     lagged = (
         daily.alias("cur")
@@ -4047,7 +4049,7 @@ def pairwise_welch(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(value_col).cast("long").alias("s"),
         F.sum(value_col * value_col).cast("long").alias("ss"),
-    ).persist()  # feeds both sides of the pair join AND n_pairs
+    ).transform(hold)  # feeds both sides of the pair join AND n_pairs
     pairs = (
         g.alias("a")
         .crossJoin(g.alias("b"))
@@ -4147,7 +4149,7 @@ def eb_shrunk_rates(
     g = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col(success_col).cast("long")).cast("long").alias("pos"),
-    ).persist()  # feeds the global scalar AND the output rows
+    ).transform(hold)  # feeds the global scalar AND the output rows
     tot = g.agg(
         F.sum("n").cast("long").alias("n_tot"),
         F.sum("pos").cast("long").alias("p_tot"),
@@ -4256,9 +4258,9 @@ def bradley_terry(
             F.count(F.lit(1)).cast("long").alias("n"),
         )
         # bounded (<= C(n_teams,2) rows) and referenced by the directed
-        # view, the wins view, and every MM round — checkpoint the
+        # view, the wins view, and every MM round — materialize the
         # INPUT of the iteration once (CLAUDE.md iterative-op rule)
-        .persist()
+        .transform(hold)
     )
     directed = pairs.select(
         F.col("i").alias("t"), F.col("j").alias("o"), "n"
@@ -4612,7 +4614,7 @@ def friedman_test(
         .join(counts, ["blk", "trt"], "left")
         .select("blk", "trt", F.coalesce("v", F.lit(0)).alias("v"))
         # referenced by both sides of the rank self-join
-        .persist()
+        .transform(hold)
     )
     o = full.select(
         F.col("blk").alias("blk_o"),
@@ -5290,7 +5292,7 @@ def gaussian_mixture_em_1d(
     map-combined weighted-moment aggregate per round over the cents
     projection; parameters ride 1-row broadcast relations. Output one
     row: (w1, mu1_cents, s1_cents, mu2_cents, s2_cents, n)."""
-    x = df.select(cents_col.cast("long").alias("x")).persist()
+    x = df.select(cents_col.cast("long").alias("x")).transform(hold)
     m0 = x.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -5586,7 +5588,7 @@ def price_index(
             F.sum("cents").cast("long").alias("c"),
             F.sum("qty").cast("long").alias("q"),
         )
-        .persist()
+        .transform(hold)
     )
     yrs = per_all.agg(
         F.min("yr").alias("y0"), F.max("yr").alias("y1")
@@ -5849,7 +5851,7 @@ def durbin_watson(
             .alias("y"),
             "day",
         )
-        .persist()  # feeds the moment pass AND the lag window
+        .transform(hold)  # feeds the moment pass AND the lag window
     )
     mom = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -6838,7 +6840,7 @@ def pacf_3(df: DataFrame, day_col: str, dp: int = 6) -> DataFrame:
     daily0 = (
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
-        .persist()
+        .transform(hold)
     )
     span = daily0.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     cal = span.select(
@@ -7438,7 +7440,7 @@ def mann_kendall(df: DataFrame, day_col: str, dp: int = 6) -> DataFrame:
     daily = (
         df.groupBy(F.col(day_col).alias("day"))
         .agg(F.count(F.lit(1)).cast("long").alias("y"))
-        .persist()  # day grid; feeds pair join, ties, moments
+        .transform(hold)  # day grid; feeds pair join, ties, moments
     )
     a = daily.select(F.col("day").alias("d1"), F.col("y").alias("y1"))
     b = daily.select(F.col("day").alias("d2"), F.col("y").alias("y2"))
@@ -7774,7 +7776,7 @@ def abc_analysis(
             F.count(F.lit(1)).cast("long").alias("n_items"),
             F.sum("cents").cast("long").alias("vtot"),
         )
-        .persist()  # value histogram; bounds + bucketing re-read it
+        .transform(hold)  # value histogram; bounds + bucketing re-read it
     )
     cb = _bounded_cum_before(hist, F.col("vtot"), descending=True)
     tot = hist.agg(F.sum("vtot").cast("long").alias("tot"))
@@ -8770,7 +8772,7 @@ def variance_ratio(
             .cast("long")
             .alias("y"),
         )
-        .persist()  # calendar-filled grid; feeds every lag
+        .transform(hold)  # calendar-filled grid; feeds every lag
     )
     wd = W.orderBy("day")  # one row per calendar day
     lags = [1] + [k for k in ks if k != 1]
@@ -8905,7 +8907,7 @@ def hurst_rs(
         F.col("m").alias("y"),
     )
     # observed-day grid indexed by t; missing days simply shorten runs
-    grid = cal.persist()
+    grid = cal.transform(hold)
     nt = grid.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     blocks = (
         grid.crossJoin(F.broadcast(lns))
@@ -9113,7 +9115,7 @@ def logistic_growth(df: DataFrame, day_col: str, unit_col: str, dp: int = 6) -> 
             F.datediff(F.col("fday"), F.col("d0")).cast("long").alias("t")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("a"))
-        .persist()  # first-touch day grid (calendar-bounded)
+        .transform(hold)  # first-touch day grid (calendar-bounded)
     )
     wt = W.orderBy("t").rowsBetween(W.unboundedPreceding, 0)
     curve = daily.select(
@@ -9279,7 +9281,7 @@ def growth_accounting(
             .alias("mi"),
         )
         .distinct()
-        .persist()  # (unit, month) activity; feeds both windows
+        .transform(hold)  # (unit, month) activity; feeds both windows
     )
     wu = W.partitionBy("u").orderBy("mi")
     maxm = um.agg(F.max("mi").alias("max_mi"))
@@ -9401,7 +9403,7 @@ def jonckheere_terpstra(
         F.col(ord_col).alias("g"), F.col(value_col).alias("v")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
     # bounded grid relation referenced 4x (vals/grps/grid/sizes)
-    hist = hist.persist()
+    hist = hist.transform(hold)
     vals = hist.select("v").distinct()
     grps = hist.select("g").distinct()
     grid = (
@@ -9412,14 +9414,11 @@ def jonckheere_terpstra(
     wg = W.partitionBy("g").orderBy("v").rowsBetween(
         W.unboundedPreceding, -1
     )
-    # The grid is referenced twice (pair i/j sides); a lazy form was
-    # A/B-measured r14 (in-session, warm reps) at +0.3 s — the double
-    # grid recompute's extra sorts/exchanges cost more than this one
-    # blocking job. The eager-ckpt-vs-recompute tradeoff flips both
-    # ways (CLAUDE.md r13); here the checkpoint wins.
+    # The grid is referenced twice (pair i/j sides); recomputing it per
+    # side measured +0.3 s (r14, in-session warm reps), so it is held.
     cumg = grid.select(
         "g", "v", "c", F.coalesce(F.sum("c").over(wg), F.lit(0)).alias("cb")
-    ).persist()  # bounded (groups x values) grid, used twice
+    ).transform(hold)  # bounded (groups x values) grid, used twice
     pairs = (
         cumg.alias("i")
         .join(cumg.alias("j"), F.col("i.v") == F.col("j.v"))
@@ -9529,7 +9528,7 @@ def dunn_test(df: DataFrame, group_col: str, value_col: str, dp: int = 6) -> Dat
         F.col(group_col).alias("g"), F.col(value_col).alias("v")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
     # bounded histogram referenced by the pooled ranks AND group sums
-    hist = hist.persist()
+    hist = hist.transform(hold)
     pooled = hist.groupBy("v").agg(F.sum("c").cast("long").alias("t"))
     # pooled DISTINCT-value histogram (bounded)
     wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
@@ -9770,7 +9769,7 @@ def iqr_outliers(df: DataFrame, cents_col: str) -> DataFrame:
     hist = (
         df.groupBy(F.col(cents_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # value histogram; bounds + bucketing re-read
+        .transform(hold)  # value histogram; bounds + bucketing re-read
     )
     cb = _bounded_cum_before(hist, F.col("c"))
     tot = hist.agg(F.sum("c").cast("long").alias("n"))
@@ -10036,7 +10035,7 @@ def wilcoxon_signed_rank(
             F.count(F.lit(1)).cast("long").alias("c"),
             F.sum((F.col("d") > 0).cast("long")).cast("long").alias("cpos"),
         )
-        .persist()  # |d| histogram; bounds + bucketing re-read
+        .transform(hold)  # |d| histogram; bounds + bucketing re-read
     )
     cb = _bounded_cum_before(hist, F.col("c"))
     ranked = cb.select(
@@ -10406,7 +10405,7 @@ def top_share(df: DataFrame, cents_col: str, pct: int = 80) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("c"),
             F.sum(F.col(cents_col)).cast("long").alias("mass"),
         )
-        .persist()  # value histogram; bounds + bucketing re-read
+        .transform(hold)  # value histogram; bounds + bucketing re-read
     )
     cb = _bounded_cum_before(hist, F.col("c"))
     tot = hist.agg(
@@ -11894,7 +11893,7 @@ def quade_test(
     cells = df.groupBy(
         F.col(block_col).alias("blk"), F.col(treat_col).alias("trt")
     ).agg(F.sum(F.col(v_col)).cast("long").alias("val"))
-    cells = cells.persist()  # re-read by both rank joins
+    cells = cells.transform(hold)  # re-read by both rank joins
     # bounded driver actions: distinct treatment / block counts are
     # grid-sized scalars (k x b cells), needed as Python ints for the
     # F-statistic's literal degrees of freedom.
@@ -12295,7 +12294,7 @@ def palma_hoover(df: DataFrame, v_col: str, dp: int = 6) -> DataFrame:
     hist = (
         df.groupBy(F.col(v_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # value histogram; bounds + bucketing re-read
+        .transform(hold)  # value histogram; bounds + bucketing re-read
     )
     cb = _bounded_cum_before(hist, F.col("c"))
     tot = hist.agg(
@@ -12399,7 +12398,7 @@ def log_cagr(
     yearly = df.groupBy(
         F.col(group_col).alias("grp"), F.col(year_col).alias("y")
     ).agg(F.sum(F.col(v_col)).cast("long").alias("v"))
-    yearly = yearly.persist()  # endpoints + both lookups re-read
+    yearly = yearly.transform(hold)  # endpoints + both lookups re-read
     ends = yearly.groupBy("grp").agg(
         F.min("y").cast("long").alias("y_first"),
         F.max("y").cast("long").alias("y_last"),
@@ -13200,7 +13199,7 @@ def robust_quantile_moments(df: DataFrame, v_col: str, dp: int = 6) -> DataFrame
     hist = (
         df.groupBy(F.col(v_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # value histogram; bounds + bucketing re-read
+        .transform(hold)  # value histogram; bounds + bucketing re-read
     )
     cb = _bounded_cum_before(hist, F.col("c"))
     tot = hist.agg(F.sum("c").cast("long").alias("n"))
@@ -13471,7 +13470,7 @@ def breusch_pagan(
     ser = df.select(F.col(day_col).alias("day"), v.alias("v")).withColumn(
         "t", F.row_number().over(W.orderBy("day")).cast("long")
     )
-    ser = ser.persist()  # mom + residual lanes both read it
+    ser = ser.transform(hold)  # mom + residual lanes both read it
     mom = ser.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("t").cast("long").alias("st"),
@@ -13707,7 +13706,7 @@ def lilliefors(df: DataFrame, v_col: str, dp: int = 6) -> DataFrame:
     hist = (
         df.groupBy(F.col(v_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # bounded vocabulary; cum + moments read it
+        .transform(hold)  # bounded vocabulary; cum + moments read it
     )
     mom = hist.agg(
         F.sum("c").cast("long").alias("n"),

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from celeborn_spark.operators import _spread
+from celeborn_spark.operators import _spread, hold
 
 # Tiny deterministic stopword lists for the n-gram language heuristic.
 # Real pipelines would plug fasttext/cld3 in via a pandas_udf; the
@@ -420,14 +420,14 @@ def pmi_bigrams(
         spread.select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(hold)
     )
     tot_uni = uni.agg(F.sum("c").alias("tot_uni"))
     bg = (
         spread.select(F.explode(bigrams(text_col)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .persist()
+        .transform(hold)
     )
     tot_bg = bg.agg(F.sum("c12").alias("tot_bg"))
     w1 = F.split(F.col("bg"), " ").getItem(0)
@@ -520,7 +520,7 @@ def bpe_train(
             F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")).alias("s"),
             "freq",
         )
-        .persist()
+        .transform(hold)
     )
     merges = []
     for r in range(n_merges):
@@ -634,7 +634,7 @@ def bpe_apply_curve(
             F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")).alias("s"),
             "freq",
         )
-        .persist()
+        .transform(hold)
     )
 
     def total(words_df: DataFrame, r: int) -> DataFrame:
@@ -1019,7 +1019,7 @@ def sparse_cosine_pairs(
                 F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6
             ).alias("w"),
         )
-        .persist()  # feeds norms + both sides of the pair join
+        .transform(hold)  # feeds norms + both sides of the pair join
     )
     norms = w.groupBy("id").agg(
         F.round(F.sqrt(F.sum(F.col("w") * F.col("w"))), 6).alias("nrm")
@@ -1633,7 +1633,7 @@ def bigram_conditional_entropy(
         )
         .groupBy(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c_uv"))
-        .persist()  # feeds the marginal AND the walk
+        .transform(hold)  # feeds the marginal AND the walk
     )
     marg = bi.groupBy("u").agg(F.sum("c_uv").cast("long").alias("c_u"))
     w = WW.orderBy("u", "v").rowsBetween(WW.unboundedPreceding, 0)
@@ -1717,7 +1717,7 @@ def negative_sampling_table(
         docs.select(F.explode(tokens(F.col(text_col))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds the weight walk AND the Z total
+        .transform(hold)  # feeds the weight walk AND the Z total
     )
     pw = f"{power_num}.0 / {power_den}"
     weighted = counts.withColumn(
@@ -1919,7 +1919,7 @@ def _overlap_counts(docs: DataFrame) -> DataFrame:
         )
         .groupBy("doc_id", "lang", "kind", "g")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
+        .transform(hold)
     )
     uni = counts_all.filter(F.col("kind") == 1).drop("kind")
     bg = counts_all.filter(F.col("kind") == 2).drop("kind")
@@ -2516,7 +2516,7 @@ def source_vocab_jaccard(
             F.explode(tokens(F.col(text_col))).alias("tok"),
         )
         .distinct()
-        .persist()  # vocab catalog: sizes + self-join both read it
+        .transform(hold)  # vocab catalog: sizes + self-join both read it
     )
     sizes = sv.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("nv"))
     a = sv.select(F.col("src").alias("src_a"), "tok")
@@ -2620,7 +2620,7 @@ def char_trigram_entropy(
     tc = (
         tri.groupBy("lang", "g")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # totals + trigram terms + context counts
+        .transform(hold)  # totals + trigram terms + context counts
     )
     tot = tc.groupBy("lang").agg(
         F.sum("c").cast("long").alias("n"),

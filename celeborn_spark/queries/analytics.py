@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from celeborn_spark.catalog import load_table
+from celeborn_spark.operators import hold
 from celeborn_spark.operators.classify import (
     classification_report_oracle_sql,
     naive_bayes_confusion,
@@ -791,7 +792,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", item.alias("item"))
         .distinct()
-        .persist()
+        .transform(hold)
     )
     nt = truth.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_truth")
@@ -852,7 +853,7 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     du = ev.select(
         F.date_trunc("day", "ts").cast("date").alias("day"), "user_id"
-    ).distinct().persist()  # feeds the day grid AND the band join
+    ).distinct().transform(hold)  # feeds the day grid AND the band join
     days = du.select("day").distinct()
     joined = days.alias("d").join(
         du.alias("u"),
@@ -908,7 +909,7 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "ts").alias("month"),
         F.date_trunc("day", "ts").cast("date").alias("day"),
         "user_id",
-    ).distinct().persist()  # feeds the DAU grid AND the MAU agg
+    ).distinct().transform(hold)  # feeds the DAU grid AND the MAU agg
     dau = du.groupBy("month", "day").agg(
         F.countDistinct("user_id").cast("long").alias("dau")
     )
@@ -1037,7 +1038,7 @@ def q_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("item", "day")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # feeds the max-day scalar AND the walk
+        .transform(hold)  # feeds the max-day scalar AND the walk
     )
     mx = cells.agg(F.max("day").alias("d_max"))
     wd = W.partitionBy("item").orderBy("day").rowsBetween(
@@ -1213,7 +1214,7 @@ def q_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", item.alias("item"))
         .distinct()
-        .persist()
+        .transform(hold)
     )
     nt = truth.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_truth")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from celeborn_spark.catalog import load_table
 from celeborn_spark.operators import curriculum as C
+from celeborn_spark.operators import hold
 from celeborn_spark.operators import textops as T
 from celeborn_spark.queries.text import _SW
 from celeborn_spark.registry import query
@@ -72,7 +73,7 @@ def q_quality_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # quantile_bins consumes the scored relation twice (histogram +
         # join-back); materialize the slim (id, chars, q) projection so
         # the tokenization-heavy scoring runs once, not per branch
-        .persist()
+        .transform(hold)
     )
     # quantize_dp=6 is idempotent on the already-6dp-rounded score, so
     # bins are bit-identical to the unquantized form (oracle unchanged)
@@ -286,7 +287,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # three quantile_bins passes re-read this relation (histogram +
         # join-back each): materialize the slim per-customer base once
-        .persist()
+        .transform(hold)
     )
     b = C.quantile_bins(base, "r_days", n_bins=5, bin_col="r_bin")
     b = C.quantile_bins(b, "f_orders", n_bins=5, bin_col="f_bin")

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from celeborn_spark.catalog import load_table
+from celeborn_spark.operators import hold
 from celeborn_spark.operators import kmeans as K
 from celeborn_spark.operators import similarity as S
 from celeborn_spark.registry import query
@@ -149,7 +150,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed RATE — vec_id % 29, ~3.4% — making the probe O(N^2/29) with a
     linearly growing broadcast side; VERDICT r9 item 2.)"""
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = S.embedding_near_dup_pairs(emb, bits=12, threshold=0.5).persist()
+    pairs = S.embedding_near_dup_pairs(emb, bits=12, threshold=0.5).transform(hold)
 
     # the 64-vector brute-force guard streams N x 64 dot products — a
     # single-split scan would run them all on one core (r13: 2.8 s).
@@ -497,7 +498,7 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("label", "pos")
         .agg(F.round(F.avg("x"), 6).alias("v"))
-        .persist()  # both sides of the pair join
+        .transform(hold)  # both sides of the pair join
     )
     p = (
         c.alias("a")
@@ -724,7 +725,7 @@ def q_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["val"],
             ).alias("embedding")
         )
-        .persist()  # feeds both sides of the approx search
+        .transform(hold)  # feeds both sides of the approx search
     )
     def _topk(df):
         qs = df.filter(F.col("vec_id") < 5).select(
@@ -815,7 +816,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("label", half, F.posexplode(S.as_double_array("embedding")).alias("pos", "x"))
         .groupBy("label", "half", "pos")
         .agg(F.round(F.avg("x"), 6).alias("m"))
-        .persist()
+        .transform(hold)
     )
     a = dims.filter(F.col("half") == 0).select(
         "label", "pos", F.col("m").alias("ma")
@@ -898,9 +899,9 @@ def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.posexplode(S.as_double_array("embedding")).alias("pos", "x")
-    ).persist()  # read by every distance/median pass
+    ).transform(hold)  # read by every distance/median pass
     m = (
-        e.groupBy("pos").agg(F.round(F.avg("x"), 6).alias("m")).persist()
+        e.groupBy("pos").agg(F.round(F.avg("x"), 6).alias("m")).transform(hold)
     )
     for _ in range(2):
         d = (
@@ -989,7 +990,7 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass over the row mass each)
     c = dims.groupBy(F.col("label").alias("clabel"), F.col("pos").alias("cpos")).agg(
         F.round(F.avg("x"), 6).alias("v")
-    ).persist()
+    ).transform(hold)
     d = (
         dims.join(
             F.broadcast(c),
@@ -1010,7 +1011,7 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.groupBy("label").agg(
         F.round(F.avg("dist"), 6).alias("scatter"),
         F.count(F.lit(1)).cast("long").alias("n"),
-    ).persist()
+    ).transform(hold)
     c1 = c.select(
         F.col("clabel").alias("i"), F.col("cpos").alias("p1"), F.col("v").alias("v1")
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from celeborn_spark.catalog import load_table
 from celeborn_spark.operators import curriculum as C
+from celeborn_spark.operators import hold
 from celeborn_spark.operators import stats as stats_ops
 from celeborn_spark.operators.stats import (
     corr_matrix,
@@ -1215,7 +1216,7 @@ def q_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         conv.withColumn("c", F.lit(1)), "user_id", "left"
     ).select(
         "user_id", "t0", F.coalesce("c", F.lit(0)).alias("converted")
-    ).persist()  # referenced by bounds + the bucketed walk
+    ).transform(hold)  # referenced by bounds + the bucketed walk
     n_buckets = 1024
     tb = obs.agg(F.min("t0").alias("_lo"), F.max("t0").alias("_hi"))
     span = F.col("_hi") - F.col("_lo")
@@ -2246,7 +2247,7 @@ def q_bayes_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("na") - F.col("sa") + 1).alias("b1"),
         (F.col("sb") + 1).alias("a2"),
         (F.col("nb") - F.col("sb") + 1).alias("b2"),
-    ).persist()  # 1-row scalar table feeding the support join
+    ).transform(hold)  # 1-row scalar table feeding the support join
     # bounded 421-row log-factorial grid (fixed integers, never data)
     lf = (
         spark.range(0, 421)
@@ -2261,7 +2262,7 @@ def q_bayes_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(W.orderBy("i").rowsBetween(W.unboundedPreceding, 0))
             .alias("lfv"),
         )
-        .persist()  # 9 broadcast lookups reference it
+        .transform(hold)  # 9 broadcast lookups reference it
     )
     grid = spark.range(0, 421).select(F.col("id").alias("ti"))
     support = post.join(F.broadcast(grid), F.col("ti") < F.col("a1"))

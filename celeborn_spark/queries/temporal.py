@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from celeborn_spark.catalog import load_table
+from celeborn_spark.operators import hold
 from celeborn_spark.operators.resample import (
     merge_intervals,
     merge_intervals_oracle_sql,
@@ -826,7 +827,7 @@ def q_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("w")
         )
         .distinct()
-        .persist()
+        .transform(hold)
     )
     cohort = uw.groupBy("user_id").agg(F.min("w").alias("cw"))
     sizes = cohort.groupBy("cw").agg(
@@ -1728,7 +1729,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("s")
         .agg(F.coalesce(F.sum("conv_n"), F.lit(0)).cast("long").alias("val"))
-        .persist()  # 16-row value table, referenced twice below
+        .transform(hold)  # 16-row value table, referenced twice below
     )
     from celeborn_spark.operators import values_table
 

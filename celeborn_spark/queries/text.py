@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from celeborn_spark.catalog import load_table
+from celeborn_spark.operators import hold
 from celeborn_spark.operators import textops as T
 from celeborn_spark.operators.graph import pagerank_oracle_sql
 from celeborn_spark.operators.stats import (
@@ -853,7 +854,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2 = (
         bg_tbl.groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .persist()
+        .transform(hold)
     )
     with_w = c2.withColumn("w1", F.substring_index("bg", " ", 1)).withColumn(
         "w2", F.substring_index("bg", " ", -1)

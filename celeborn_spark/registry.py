@@ -19,9 +19,12 @@ Rules enforced by convention:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from celeborn_spark.operators import release_held
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -39,10 +42,16 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        _QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def invoke(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release_held()
+            return fn(spark, sf_dir)
+
+        _QUERIES[name] = invoke
         if oracle is not None:
             _ORACLES[name] = oracle
-        return fn
+        return invoke
 
     return deco
 

