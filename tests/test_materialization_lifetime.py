@@ -11,11 +11,16 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
 
 import pyarrow.parquet as pq
 
 from celeborn_spark import registry
 from perfbench.workloads import CURATED_DOCS, WORKLOADS
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _rows(df):
@@ -57,3 +62,32 @@ def test_cache_manager_empties_after_repeated_pinned_queries(spark, sf_dir):
             fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     fns["q1_pricing_summary"](spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# A relation held in a session that was then stopped cannot be
+# unpersisted (the stopped BlockManager is gone); the next session's
+# first query must still run. In a subprocess: it stops its session.
+_RESTART_SCRIPT = textwrap.dedent(
+    """
+    import sys
+    from pyspark.sql import SparkSession
+    from celeborn_spark import registry
+    from celeborn_spark.operators import hold
+
+    spark = SparkSession.builder.master("local[2]").getOrCreate()
+    spark.range(10).transform(hold).count()
+    spark.stop()
+    spark = SparkSession.builder.master("local[2]").getOrCreate()
+    q = registry.queries()["q1_pricing_summary"]
+    print("ROWS", q(spark, sys.argv[1]).count())
+    spark.stop()
+    """
+)
+
+
+def test_query_runs_after_session_restart(sf_dir):
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, sf_dir],
+        capture_output=True, text=True, timeout=300, cwd=REPO,
+    )
+    assert proc.returncode == 0 and "ROWS" in proc.stdout, proc.stderr[-2000:]
